@@ -16,22 +16,17 @@ epoch M — curation's cross-batch dedup index and per-source pack
 offsets therefore advance in RELEASE order, which is what makes the
 composition's closed form expressible (and hash-checkable) at all.
 
-Single-protocol state layout, one root:
-
-- ``state_dir/stats|pending/v<epoch>`` — the privacy gate's families
-  (:mod:`.privacy`).
-- ``state_dir/released/v<epoch>`` — the privacy gate's per-epoch
-  release output, which is also curation's per-epoch INPUT.
-- ``state_dir/hashes|shingles|offsets/v<epoch>`` — curation's
-  families (:mod:`.curation`).
-- ``out_dir/v<epoch>`` — the packed training stream.
-- ``state_dir/_commits/<epoch>`` — ONE marker for the whole composed
-  epoch, landed only after every family's write succeeded. Both
-  sub-pipelines are constructed with ``autocommit=False`` over the
-  SAME state root, so they discover committed epochs from the shared
-  marker set: a crash anywhere mid-epoch (privacy written, curation
-  not) leaves no marker, every reader stays blind to the torn epoch,
-  and the replay rewrites all seven ``v<epoch>`` dirs.
+One protocol, one root: both sub-pipelines are built with
+``autocommit=False`` over the SAME ``state_dir``, so their
+:class:`~.epochio.EpochStore` shares one marker set. Privacy's
+``stats``/``pending`` families and its ``released`` output (which is
+also curation's per-epoch INPUT) sit under ``state_dir`` next to
+curation's ``hashes``/``shingles``/``offsets``; the packed training
+stream goes to ``out_dir``. ONE marker lands for the whole composed
+epoch, only after every family's write succeeded: a crash anywhere
+mid-epoch (privacy written, curation not) leaves no marker, every
+reader stays blind to the torn epoch, and the replay rewrites every
+``v<epoch>`` dir.
 
 Monotone release (privacy) + order-insensitive index/dedup semantics
 (curation on release-ordered batches) ⇒ the batch-twin identity holds
@@ -72,7 +67,6 @@ class ComposedGatesPipeline:
         min_tokens: int = 20,
         train_cut: str = "cd",
         pack_size: int = 512,
-        num_partitions: int = 8,
     ):
         self.state_dir = state_dir
         self.id_col = id_col
@@ -87,7 +81,6 @@ class ComposedGatesPipeline:
             text_col=text_col,
             k=k,
             l_div=l_div,
-            num_partitions=num_partitions,
             autocommit=False,
         )
         self.curation = StreamingCurationPipeline(
@@ -96,12 +89,9 @@ class ComposedGatesPipeline:
             min_tokens=min_tokens,
             train_cut=train_cut,
             pack_size=pack_size,
-            num_partitions=num_partitions,
             autocommit=False,
         )
-
-    def _committed_epochs(self) -> list[int]:
-        return self.privacy._committed_epochs()  # shared root
+        self.store = self.privacy.store  # the shared marker root
 
     def read_output(self, spark: SparkSession) -> DataFrame | None:
         """Committed packed training stream (curation's output)."""
@@ -133,10 +123,15 @@ class ComposedGatesPipeline:
                 ),
                 epoch_id,
             )
-        finally:
-            # privacy's writes quiesce before any failure propagates:
-            # a torn epoch leaves a settled (arbitrary) subset of
-            # v<epoch> dirs and NO marker — the seam matrix's contract
-            wait_privacy()
+        except BaseException as err:
+            # privacy's writes settle before the failure propagates (a
+            # torn epoch leaves settled v<epoch> dirs and NO marker);
+            # the curation error stays the one raised
+            try:
+                wait_privacy()
+            except BaseException as also:
+                err.add_note(f"the epoch's privacy writes failed too: {also!r}")
+            raise
+        wait_privacy()
         # 5. the composed epoch's single commit marker
-        self.privacy._finalize(epoch_id)
+        self.store.commit(batch_df.sparkSession, epoch_id)

@@ -9,27 +9,25 @@ hands each message batch to a pipeline — PulsarMessageConsumer.java
 :535-545) and the LLM-data-pipeline layer: the pipeline a curation
 user would inject IS this object.
 
-State design (the ``KeyedRetryPipeline`` idempotency recipe,
-delivery.py:283):
+State families, versioned per epoch in an :class:`~.epochio.EpochStore`
+rooted at ``state_dir`` (a replayed micro-batch rewrites its versions
+instead of appending twice: exactly-once output from at-least-once
+delivery):
 
-- ``state_dir/hashes/v<epoch>/`` — per-epoch DELTA of accepted
-  documents' text hashes (exact-dedup index). Append-only: reading
-  the index unions the committed deltas; a 100 TB deployment
-  compacts old deltas with the layout.compact_small_files kernel.
-- ``state_dir/shingles/v<epoch>/`` — per-epoch delta of accepted
-  documents' hashed 3-gram shingles (near-dup inverted index). Each
-  batch probes base-vs-delta only (``jaccard_matches_against``) —
-  never base×base, so ingest cost is bounded by the batch.
-- ``state_dir/offsets/v<epoch>/`` — full snapshot (it is one row per
-  source) of the per-source cumulative token totals, so sequence
-  packing continues across batch boundaries exactly where the
-  previous batch stopped.
-- A commit marker under ``state_dir/_commits/<epoch>`` lands only
-  after every write of that epoch succeeds. A replayed micro-batch
-  (crash between state write and offset commit — the K3 case)
-  deterministically REWRITES the same ``v<epoch>`` directories
-  instead of appending twice: exactly-once output from at-least-once
-  delivery.
+- ``state_dir/hashes`` — per-epoch DELTA of accepted documents' text
+  hashes (exact-dedup index). Append-only: reading the index unions
+  the committed deltas; a 100 TB deployment compacts old deltas with
+  the layout.compact_small_files kernel.
+- ``state_dir/shingles`` — per-epoch delta of accepted documents'
+  hashed 3-gram shingles (near-dup inverted index), written only with
+  the near-dup probe enabled. Each batch probes base-vs-delta only
+  (``jaccard_matches_against``) — never base×base, so ingest cost is
+  bounded by the batch.
+- ``state_dir/offsets`` — full snapshot (it is one row per source) of
+  the per-source cumulative token totals, so sequence packing
+  continues across batch boundaries exactly where the previous batch
+  stopped.
+- ``out_dir`` — the epoch's packed output.
 
 Batch-boundary consistency: when batches arrive in doc_id order, the
 union of the committed per-epoch outputs is row-identical to the
@@ -40,12 +38,11 @@ single-shot batch twin (asserted in tests/test_streaming_curation.py)
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from mi_inbound_pulsar_spark.streaming.epochio import write_all
+from mi_inbound_pulsar_spark.streaming.epochio import EpochStore
 
 MIN_TOKENS = 20
 TRAIN_CUT = "cd"
@@ -58,7 +55,9 @@ class StreamingCurationPipeline:
 
     ``neardup_threshold=None`` disables the shingle probe (exact
     cross-batch dedup only) — that configuration is row-identical to
-    ``q_training_data_pipeline`` on ordered input.
+    ``q_training_data_pipeline`` on ordered input. The shingle index
+    is only written while the probe is enabled, so enabling it on state
+    committed without it fails with the epochs the index lacks.
     """
 
     def __init__(
@@ -69,7 +68,6 @@ class StreamingCurationPipeline:
         train_cut: str = TRAIN_CUT,
         pack_size: int = PACK_SIZE,
         neardup_threshold: float | None = None,
-        num_partitions: int = 8,
         autocommit: bool = True,
     ):
         self.state_dir = state_dir
@@ -78,46 +76,14 @@ class StreamingCurationPipeline:
         self.train_cut = train_cut
         self.pack_size = pack_size
         self.neardup_threshold = neardup_threshold
-        self.num_partitions = num_partitions
         # autocommit=False → a composing caller owns the epoch's single
         # commit marker (streaming/composed.py)
         self.autocommit = autocommit
-        os.makedirs(os.path.join(state_dir, "_commits"), exist_ok=True)
-
-    # -- state plumbing (the KeyedRetryPipeline recipe) ---------------------
-    def _committed_epochs(self) -> list[int]:
-        d = os.path.join(self.state_dir, "_commits")
-        return sorted(int(f) for f in os.listdir(d)) if os.path.isdir(d) else []
-
-    def _delta_paths(self, kind: str, epochs: list[int]) -> list[str]:
-        return [os.path.join(self.state_dir, kind, f"v{e}") for e in epochs]
-
-    def _write(self, df: DataFrame, root: str, epoch_id: int, key: str) -> None:
-        path = os.path.join(root, f"v{epoch_id}")
-        shutil.rmtree(path, ignore_errors=True)  # replayed epoch: rewrite
-        # keyed exchange WITHOUT a pinned partition count (round 13):
-        # AQE coalesces the write to the family's actual bytes — one
-        # file per tiny replay epoch instead of num_partitions near-
-        # empty tasks+files, while a corpus-scale epoch still fans out
-        # to shuffle.partitions (scale-adaptive, guide §6/§2).
-        # num_partitions stays as the explicit override for layouts
-        # that must shard deterministically.
-        df.repartition(F.col(key)).write.mode("overwrite").parquet(path)
-
-    # concurrent epoch-family writes; one shared implementation so the
-    # crash-seam contract cannot diverge between pipelines (epochio.py)
-    _write_all = write_all
-
-    def _finalize(self, epoch_id: int) -> None:
-        with open(os.path.join(self.state_dir, "_commits", str(epoch_id)), "w"):
-            pass
+        self.store = EpochStore(state_dir)
 
     def read_output(self, spark: SparkSession) -> DataFrame | None:
         """Union of the committed per-epoch packed outputs."""
-        paths = [
-            os.path.join(self.out_dir, f"v{e}") for e in self._committed_epochs()
-        ]
-        return spark.read.parquet(*paths) if paths else None
+        return self.store.read(spark, self.out_dir)
 
     @staticmethod
     def _hashed_shingles(docs: DataFrame) -> DataFrame:
@@ -135,7 +101,7 @@ class StreamingCurationPipeline:
         from mi_inbound_pulsar_spark.operators.sampling import hash_bucket
 
         spark = batch_df.sparkSession
-        committed = [e for e in self._committed_epochs() if e < epoch_id]
+        fam = {f: os.path.join(self.state_dir, f) for f in ("hashes", "shingles", "offsets")}
 
         # 1. quality gate — narrow filter, pushed to the batch scan
         quality = batch_df.select(
@@ -161,16 +127,16 @@ class StreamingCurationPipeline:
             )
         )
         # 2b. cross-batch exact dedup: anti-join the accepted-hash index
-        if committed:
-            base_hashes = spark.read.parquet(
-                *self._delta_paths("hashes", committed)
-            ).select("text_md5")
-            deduped = deduped.join(base_hashes, "text_md5", "left_anti")
+        base_hashes = self.store.read(spark, fam["hashes"], before=epoch_id)
+        if base_hashes is not None:
+            deduped = deduped.join(base_hashes.select("text_md5"), "text_md5", "left_anti")
         # 2c. cross-batch near-dup: probe the base shingle index with
         # the delta only (q_dedup_incremental's asymmetric join — the
         # index is never self-joined)
-        if self.neardup_threshold is not None and committed:
-            sh_base = spark.read.parquet(*self._delta_paths("shingles", committed))
+        sh_base = None
+        if self.neardup_threshold is not None:
+            sh_base = self.store.read(spark, fam["shingles"], before=epoch_id)
+        if sh_base is not None:
             sh_delta = self._hashed_shingles(deduped.select("doc_id", "text"))
             near = jaccard_matches_against(
                 sh_delta, sh_base, self.neardup_threshold
@@ -185,11 +151,8 @@ class StreamingCurationPipeline:
         train = survivors.filter(
             hash_bucket(F.col("doc_id"), "split-") < self.train_cut
         )
-        if committed:
-            offsets = spark.read.parquet(
-                os.path.join(self.state_dir, "offsets", f"v{committed[-1]}")
-            )
-        else:
+        offsets = self.store.read(spark, fam["offsets"], before=epoch_id, latest=True)
+        if offsets is None:
             offsets = spark.createDataFrame([], "source string, total long")
         w = (
             Window.partitionBy("source")
@@ -223,17 +186,9 @@ class StreamingCurationPipeline:
             )
         )
         writes = [
-            (
-                survivors.select("text_md5", "doc_id"),
-                os.path.join(self.state_dir, "hashes"),
-                "text_md5",
-            ),
+            (survivors.select("text_md5", "doc_id"), fam["hashes"], "text_md5"),
             (packed, self.out_dir, "source"),
-            (
-                new_offsets,
-                os.path.join(self.state_dir, "offsets"),
-                "source",
-            ),
+            (new_offsets, fam["offsets"], "source"),
         ]
         # the shingle inverted index is state FOR the near-dup probe
         # (2c) — when the probe is disabled nothing ever reads it, and
@@ -242,17 +197,20 @@ class StreamingCurationPipeline:
         # queries and the composed pipeline all run with
         # neardup_threshold=None). A deployment enabling the probe
         # mid-stream must backfill the index for pre-enable epochs
-        # either way, so the gate loses nothing.
+        # either way (the read names the missing epochs), so the gate
+        # loses nothing.
         if self.neardup_threshold is not None:
             writes.insert(
                 1,
                 (
                     self._hashed_shingles(survivors.select("doc_id", "text")),
-                    os.path.join(self.state_dir, "shingles"),
+                    fam["shingles"],
                     "shingle",
                 ),
             )
-        self._write_all(writes, epoch_id)
-        survivors.unpersist()
+        try:
+            self.store.submit(writes, epoch_id)()
+        finally:
+            survivors.unpersist()
         if self.autocommit:
-            self._finalize(epoch_id)
+            self.store.commit(spark, epoch_id)

@@ -29,7 +29,6 @@ do not double-count redeliveries.
 from __future__ import annotations
 
 import os
-import shutil
 import time
 from collections.abc import Callable
 from dataclasses import dataclass, field
@@ -38,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mi_inbound_pulsar_spark.config import DeadLetterPolicy
+from mi_inbound_pulsar_spark.streaming.epochio import EpochStore
 
 PipelineFn = Callable[[DataFrame, int], None]
 
@@ -101,87 +101,6 @@ def run_pipeline(
     if checkpoint_dir:
         writer = writer.option("checkpointLocation", checkpoint_dir)
     return writer.start()
-
-
-class RetryingPipeline:
-    """K5/K6/K7 integrated — per-*record* nack/redelivery/DLQ semantics
-    on top of micro-batch processing (SURVEY.md §7 hard part 1).
-
-    ``process`` receives each batch (original rows ∪ due redeliveries,
-    with ``redelivery_count`` reflecting the retry state) and returns
-    the message_ids that FAILED. Successes are acked (state cleared);
-    failures are nacked (count bumped, row parked for redelivery after
-    ``nack_delay_ms``); records exceeding ``policy.max_redeliveries``
-    are routed to the DLQ sink instead of being retried — the
-    reference's broker-side contract (PulsarMessageConsumer.java:203-227,
-    295-304) rebuilt engine-side.
-
-    State here is in-memory (driver) keyed by message_id — the
-    unit-test tier. The cluster-scale form is :class:`KeyedRetryPipeline`
-    below: the same semantics over a hash-partitioned, last-write-wins
-    parquet state table, with no driver collect of the data batch.
-    """
-
-    def __init__(
-        self,
-        process: Callable[[list], list[str]],
-        policy: DeadLetterPolicy,
-        nack_delay_ms: int = 0,
-        on_dead_letter: Callable[[list], None] | None = None,
-    ):
-        self.process = process
-        self.table = RetryTable(policy, nack_delay_ms=nack_delay_ms)
-        self.on_dead_letter = on_dead_letter or (lambda rows: None)
-        self._parked: dict[str, object] = {}  # message_id -> Row awaiting redelivery
-        self._dead: list = []
-
-    def __call__(self, batch_df: DataFrame, epoch_id: int, now: float | None = None) -> None:
-        now = time.time() if now is None else now
-        due = self.table.due_for_redelivery(now=now)
-        redelivered = []
-        for mid in due:
-            row = self._parked.get(mid)
-            if row is not None:
-                d = row.asDict()
-                d["redelivery_count"] = self.table.redelivery_count(mid)
-                redelivered.append(d)
-        fresh = batch_df.collect() if hasattr(batch_df, "collect") else list(batch_df)
-        rows = fresh + [_DictRow(d) for d in redelivered]
-        if not rows:
-            return
-        failed = set(self.process(rows))
-        ok_ids = [r["message_id"] for r in rows if r["message_id"] not in failed]
-        self.table.ack(ok_ids)
-        for mid in ok_ids:
-            self._parked.pop(mid, None)
-        self.table.nack(sorted(failed), now=now)
-        for r in rows:
-            mid = r["message_id"]
-            if mid in failed:
-                self._parked[mid] = r
-        # K7: exhausted records leave the retry loop for the DLQ; acking
-        # them afterwards drops them from the retry state so dead-letter
-        # bookkeeping stays bounded over the query lifetime
-        dead_now = [m for m in self.table.dead_letters() if m in self._parked]
-        if dead_now:
-            dead_rows = [self._parked.pop(m) for m in dead_now]
-            self._dead.extend(dead_rows)
-            self.on_dead_letter(dead_rows)
-            self.table.ack(dead_now)
-
-    @property
-    def dead_letters(self) -> list:
-        return list(self._dead)
-
-    def pending_ids(self) -> list[str]:
-        return sorted(self._parked)
-
-
-class _DictRow(dict):
-    """Row-alike over a dict (supports r['col'] and .asDict())."""
-
-    def asDict(self):  # noqa: N802 - Row API parity
-        return dict(self)
 
 
 class RetryTable:
@@ -285,19 +204,19 @@ class KeyedRetryPipeline:
     in a hash-partitioned, epoch-versioned parquet table. The data batch
     is NEVER collected to the driver; every step is a DataFrame plan.
 
-    This is the keyed-table form the ``RetryTable`` docstring promises
-    (the in-memory twin remains for unit-level semantics). Reference
+    This is the keyed-table form of :class:`RetryTable`, which stays as
+    the JVM-free reference model of the same semantics. Reference
     contract: PulsarMessageConsumer.java:203-227 (ack after process),
     :295-304 (DLQ after max redeliveries).
 
-    State layout: ``state_dir/v<epoch>/`` parquet, repartitioned by
-    ``hash(message_id)`` into ``num_partitions`` files; a commit marker
-    under ``state_dir/_commits/<epoch>`` lands only after the write
-    succeeds. An invocation at epoch N reads the newest *committed*
-    version with epoch < N, so a replayed micro-batch (crash between
-    state write and offset commit) deterministically rewrites the same
-    version instead of double-bumping redelivery counts — last-write-
-    wins upsert, idempotent under K3 replay.
+    State: the retry table is a family at ``state_dir`` itself and the
+    DLQ a family at ``dlq_dir``, both versioned per epoch under one
+    :class:`~.epochio.EpochStore` whose retention keeps the two newest
+    retry-table versions (the DLQ versions are all kept). An invocation
+    at epoch N reads the newest *committed* version below N, so a
+    replayed micro-batch (crash between state write and offset commit)
+    rewrites the same version instead of double-bumping redelivery
+    counts — last-write-wins upsert, idempotent under K3 replay.
 
     ``process(deliver_df, epoch) -> DataFrame[(message_id, ok bool)]``
     decides per-record outcomes. Rows delivered but MISSING from the
@@ -305,24 +224,13 @@ class KeyedRetryPipeline:
     parked and redelivered once the timeout elapses; without one they
     are treated as nacked immediately (conservative at-least-once).
     Rows whose bumped count reaches ``policy.max_redeliveries`` are
-    routed to ``dlq_dir/v<epoch>/`` (same idempotent versioning) and
-    dropped from state, keeping state bounded.
+    routed to the DLQ family and dropped from state, keeping state
+    bounded.
 
     Scale: state shuffles only parked rows (failures — a sliver of the
     stream) on a 1-column key; the due-row scan is a filter over a
     hash-partitioned parquet read; the union into the next batch adds
     no extra shuffle beyond the per-batch plan.
-
-    Epoch-ordering contract: Structured Streaming's ``foreachBatch``
-    delivers epochs sequentially per query — epoch N is retried until
-    committed before N+1 starts, so at most the SINGLE newest epoch can
-    ever be in-flight (torn). Readers must not rely on "epoch ≤ newest
-    marker" alone for visibility (an out-of-order replay of an old
-    epoch inside the GC retention window would briefly expose its torn
-    rewrite); ``dead_letters_df`` therefore intersects with marker
-    membership for epochs whose markers still exist, and admits older
-    epochs only below the oldest surviving marker (a marker is GC'd
-    only after newer commits, so everything below it was committed).
     """
 
     _META = ("_retry_count", "_retry_last", "_retry_pending_ack")
@@ -337,7 +245,6 @@ class KeyedRetryPipeline:
         ack_timeout_ms: int | None = None,
         backoff_multiplier: float = 1.0,
         max_delay_ms: int | None = None,
-        num_partitions: int = 8,
         clock: Callable[[], float] = time.time,
     ):
         self.process = process
@@ -348,34 +255,8 @@ class KeyedRetryPipeline:
         self.ack_timeout_ms = ack_timeout_ms
         self.backoff_multiplier = backoff_multiplier
         self.max_delay_ms = max_delay_ms
-        self.num_partitions = num_partitions
         self.clock = clock
-        os.makedirs(os.path.join(state_dir, "_commits"), exist_ok=True)
-
-    # -- state-table plumbing ------------------------------------------------
-    def _committed_epochs(self) -> list[int]:
-        d = os.path.join(self.state_dir, "_commits")
-        return sorted(int(f) for f in os.listdir(d)) if os.path.isdir(d) else []
-
-    def _read_state(self, spark: SparkSession, epoch_id: int) -> DataFrame | None:
-        prior = [e for e in self._committed_epochs() if e < epoch_id]
-        if not prior:
-            return None
-        return spark.read.parquet(os.path.join(self.state_dir, f"v{prior[-1]}"))
-
-    def _commit(self, df: DataFrame, root: str, epoch_id: int) -> None:
-        path = os.path.join(root, f"v{epoch_id}")
-        shutil.rmtree(path, ignore_errors=True)  # replayed epoch: rewrite
-        df.repartition(self.num_partitions, "message_id").write.mode("overwrite").parquet(path)
-
-    def _finalize(self, epoch_id: int) -> None:
-        marker = os.path.join(self.state_dir, "_commits", str(epoch_id))
-        with open(marker, "w"):
-            pass
-        # GC: keep the two newest committed versions
-        for old in self._committed_epochs()[:-2]:
-            shutil.rmtree(os.path.join(self.state_dir, f"v{old}"), ignore_errors=True)
-            os.unlink(os.path.join(self.state_dir, "_commits", str(old)))
+        self.store = EpochStore(state_dir, keep=2)
 
     def _delay_col(self):
         count = F.col("_retry_count")
@@ -394,7 +275,7 @@ class KeyedRetryPipeline:
     def __call__(self, batch_df: DataFrame, epoch_id: int) -> None:
         now = self.clock()
         spark = batch_df.sparkSession
-        state = self._read_state(spark, epoch_id)
+        state = self.store.read(spark, self.state_dir, before=epoch_id, latest=True)
 
         fresh = batch_df.withColumn("redelivery_count", F.lit(0))
         if state is not None:
@@ -435,47 +316,24 @@ class KeyedRetryPipeline:
         if held is not None:
             live = live.unionByName(held)
 
-        self._commit(
+        # DLQ before state, sequentially: a crash between them is the
+        # torn epoch the crash test injects
+        self.store.write(
             dead.withColumn("redelivery_count", F.col("_retry_count")).drop(*self._META),
             self.dlq_dir,
             epoch_id,
+            "message_id",
         )
-        self._commit(live, self.state_dir, epoch_id)
-        self._finalize(epoch_id)
+        self.store.write(live, self.state_dir, epoch_id, "message_id")
+        self.store.commit(spark, epoch_id)
 
     # -- inspection helpers (tests / ops) -----------------------------------
     def state_df(self, spark: SparkSession) -> DataFrame | None:
-        epochs = self._committed_epochs()
-        if not epochs:
-            return None
-        return spark.read.parquet(os.path.join(self.state_dir, f"v{epochs[-1]}"))
+        return self.store.read(spark, self.state_dir, latest=True)
 
     def dead_letters_df(self, spark: SparkSession) -> DataFrame | None:
         """Union of the COMMITTED per-epoch DLQ versions. A crash
-        between the DLQ write and the state write leaves a dlq
-        ``v<epoch>`` with no marker — those rows must stay invisible
-        until the epoch's replay completes, or a reader double-counts
-        them (found by the torn-epoch injection test). Visibility is
-        marker MEMBERSHIP for epochs inside the GC retention window,
-        plus everything below the oldest surviving marker (GC'd markers
-        were committed by construction — a marker is only removed after
-        newer commits). "epoch ≤ newest marker" alone would briefly
-        expose the torn rewrite of an out-of-order replayed old epoch
-        (ADVICE r8, delivery.py:455); the class contract states the
-        sequential-epoch invariant this guards.
-        """
-        committed = self._committed_epochs()
-        if not committed or not os.path.isdir(self.dlq_dir):
-            return None
-        marked, lo = set(committed), committed[0]
-        versions = [
-            os.path.join(self.dlq_dir, d)
-            for d in sorted(os.listdir(self.dlq_dir))
-            if d.startswith("v")
-            and d[1:].isdigit()
-            and (int(d[1:]) in marked or int(d[1:]) < lo)
-            and os.path.isdir(os.path.join(self.dlq_dir, d))
-        ]
-        if not versions:
-            return None
-        return spark.read.parquet(*versions)
+        between the DLQ write and the state write leaves a DLQ
+        ``v<epoch>`` with no marker; those rows stay invisible until the
+        epoch's replay completes, or a reader would double-count them."""
+        return self.store.read(spark, self.dlq_dir)

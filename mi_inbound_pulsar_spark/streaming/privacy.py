@@ -10,20 +10,20 @@ The streaming twist over the batch audits (``q_k_anonymity`` /
 quasi-identifier class is safe to release. The pipeline **parks** such
 records and releases them in the first epoch whose cumulative class
 statistics satisfy both thresholds (park-and-release — the
-``KeyedRetryPipeline`` recipe applied to privacy):
+``KeyedRetryPipeline`` recipe applied to privacy).
 
-- ``state_dir/stats/v<epoch>/`` — full snapshot of per-(class, band)
-  cumulative counts. Bounded by |QI domain| × |band domain| (tiny by
-  definition — if the QI domain were corpus-scale the data would be
-  trivially k-anonymous), so a snapshot, not a delta.
-- ``state_dir/pending/v<epoch>/`` — full snapshot of parked records
-  (arrival epoch preserved). Shrinks as classes qualify; bounded by
-  the rows of never-qualifying classes.
-- ``out_dir/v<epoch>/`` — records released this epoch, with their
+State families, versioned per epoch in an :class:`~.epochio.EpochStore`
+rooted at ``state_dir``:
+
+- ``state_dir/stats`` — full snapshot of per-(class, band) cumulative
+  counts. Bounded by |QI domain| × |band domain| (tiny by definition —
+  if the QI domain were corpus-scale the data would be trivially
+  k-anonymous), so a snapshot, not a delta.
+- ``state_dir/pending`` — full snapshot of parked records (arrival
+  epoch preserved). Shrinks as classes qualify; bounded by the rows of
+  never-qualifying classes.
+- ``out_dir`` — records released this epoch, with their
   ``release_epoch``.
-- ``state_dir/_commits/<epoch>`` — landed only after all writes of
-  the epoch succeed; a replayed epoch rewrites the same ``v<epoch>``
-  dirs (exactly-once from at-least-once, the K3 contract).
 
 Release is MONOTONE (cumulative counts only grow), so the union of
 committed outputs over any batch decomposition equals the single-shot
@@ -35,12 +35,11 @@ tests/test_streaming_privacy.py and hash-checked by
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mi_inbound_pulsar_spark.streaming.epochio import submit_writes, write_all
+from mi_inbound_pulsar_spark.streaming.epochio import EpochStore
 
 K_ANON = 5
 L_DIVERSE = 3
@@ -69,7 +68,6 @@ class StreamingPrivacyPipeline:
         text_col: str | None = None,
         k: int = K_ANON,
         l_div: int = L_DIVERSE,
-        num_partitions: int = 8,
         autocommit: bool = True,
     ):
         self.state_dir = state_dir
@@ -80,45 +78,17 @@ class StreamingPrivacyPipeline:
         self.text_col = text_col
         self.k = k
         self.l_div = l_div
-        self.num_partitions = num_partitions
         # autocommit=False → a composing caller owns the epoch's single
-        # commit marker (streaming/composed.py); state reads still key
-        # off this state_dir's _commits, which the composer shares
+        # commit marker (streaming/composed.py) in the same store root
         self.autocommit = autocommit
-        os.makedirs(os.path.join(state_dir, "_commits"), exist_ok=True)
-
-    # -- state plumbing (the StreamingCurationPipeline recipe) --------------
-    def _committed_epochs(self) -> list[int]:
-        d = os.path.join(self.state_dir, "_commits")
-        return sorted(int(f) for f in os.listdir(d)) if os.path.isdir(d) else []
-
-    def _write(self, df: DataFrame, root: str, epoch_id: int, key: str) -> None:
-        path = os.path.join(root, f"v{epoch_id}")
-        shutil.rmtree(path, ignore_errors=True)  # replayed epoch: rewrite
-        # AQE-coalescible keyed exchange — see curation._write (round 13)
-        df.repartition(F.col(key)).write.mode("overwrite").parquet(path)
-
-    # concurrent epoch-family writes; one shared implementation so the
-    # crash-seam contract cannot diverge between pipelines (epochio.py;
-    # plain class-level assignment binds it as a method, self=pipeline)
-    _write_all = write_all
-
-    def _finalize(self, epoch_id: int) -> None:
-        with open(os.path.join(self.state_dir, "_commits", str(epoch_id)), "w"):
-            pass
+        self.store = EpochStore(state_dir)
 
     def read_output(self, spark: SparkSession) -> DataFrame | None:
-        paths = [
-            os.path.join(self.out_dir, f"v{e}") for e in self._committed_epochs()
-        ]
-        return spark.read.parquet(*paths) if paths else None
+        return self.store.read(spark, self.out_dir)
 
     def read_pending(self, spark: SparkSession) -> DataFrame | None:
-        committed = self._committed_epochs()
-        if not committed:
-            return None
-        return spark.read.parquet(
-            os.path.join(self.state_dir, "pending", f"v{committed[-1]}")
+        return self.store.read(
+            spark, os.path.join(self.state_dir, "pending"), latest=True
         )
 
     def _redacted(self, df: DataFrame) -> DataFrame:
@@ -139,7 +109,7 @@ class StreamingPrivacyPipeline:
         _released, wait = self._run(batch_df, epoch_id)
         wait()
         if self.autocommit:
-            self._finalize(epoch_id)
+            self.store.commit(batch_df.sparkSession, epoch_id)
 
     def _run(self, batch_df: DataFrame, epoch_id: int):
         """Compute the epoch, SUBMIT its three family writes as
@@ -147,14 +117,16 @@ class StreamingPrivacyPipeline:
         ``(released_frame, wait)`` — the deferred form a composing
         caller (streaming/composed.py) uses to overlap these writes
         with the next gate's compute. ``wait()`` joins every write
-        (raising the first failure only after all have settled) and
-        releases the epoch's caches; the caller owns the commit
-        marker. The released frame derives from the PERSISTED
-        candidates cache, so a consumer reading it computes the same
-        rows the concurrent ``released`` dir write lands."""
+        (raising only after all have settled, see
+        :meth:`EpochStore.submit`) and releases the epoch's caches; the
+        caller owns the commit marker. The released frame derives from
+        the PERSISTED candidates cache, so a consumer reading it
+        computes the same rows the concurrent ``released`` dir write
+        lands."""
         spark = batch_df.sparkSession
-        committed = [e for e in self._committed_epochs() if e < epoch_id]
         qi = self.qi_cols
+        stats_dir = os.path.join(self.state_dir, "stats")
+        pending_dir = os.path.join(self.state_dir, "pending")
 
         arrivals = self._redacted(batch_df).withColumn(
             "arrival_epoch", F.lit(epoch_id).cast("long")
@@ -164,10 +136,8 @@ class StreamingPrivacyPipeline:
         batch_stats = arrivals.groupBy(*qi, self.band_col).agg(
             F.count(F.lit(1)).alias("n")
         )
-        if committed:
-            prev = spark.read.parquet(
-                os.path.join(self.state_dir, "stats", f"v{committed[-1]}")
-            )
+        prev = self.store.read(spark, stats_dir, before=epoch_id, latest=True)
+        if prev is not None:
             stats = (
                 prev.unionByName(batch_stats)
                 .groupBy(*qi, self.band_col)
@@ -193,10 +163,8 @@ class StreamingPrivacyPipeline:
 
         # 3. park-and-release: prior pending ∪ this batch, split by class
         # safety. The safe-class frame is QI-domain-bounded → broadcast.
-        if committed:
-            pending = spark.read.parquet(
-                os.path.join(self.state_dir, "pending", f"v{committed[-1]}")
-            )
+        pending = self.store.read(spark, pending_dir, before=epoch_id, latest=True)
+        if pending is not None:
             candidates = pending.unionByName(arrivals)
         else:
             candidates = arrivals
@@ -208,23 +176,17 @@ class StreamingPrivacyPipeline:
 
         # 4. idempotent epoch writes (concurrent jobs — all three
         # families derive from the persisted stats/candidates frames),
-        # then the commit marker. The separate cache-fill wave before
-        # the writes (fill_all, rounds 11-12) is gone (round 13): at
-        # replay batch sizes a job WAVE is mostly fixed scheduling
+        # then the commit marker. There is no separate cache-fill wave
+        # before the writes (round 13): at replay batch sizes a job WAVE is mostly fixed scheduling
         # cost, so one wave of slightly-fatter jobs (the racing writes
         # fill the persisted frames' caches themselves; a concurrently
         # computed partition is deduped at BlockManager put, only the
         # tiny upstream compute is duplicated) beats two waves —
         # measured on the full replay, min-of-3 interleaved.
-        wait_writes = submit_writes(
-            self,
+        wait_writes = self.store.submit(
             [
-                (stats, os.path.join(self.state_dir, "stats"), qi[0]),
-                (
-                    still_pending,
-                    os.path.join(self.state_dir, "pending"),
-                    self.id_col,
-                ),
+                (stats, stats_dir, qi[0]),
+                (still_pending, pending_dir, self.id_col),
                 (released, self.out_dir, self.id_col),
             ],
             epoch_id,

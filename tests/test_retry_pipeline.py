@@ -4,90 +4,13 @@ rebuilt on micro-batches)."""
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import functions as F
 
 from mi_inbound_pulsar_spark.config import DeadLetterPolicy
 from mi_inbound_pulsar_spark.sources.pulsar_source import (
     publish_frame,
     simulated_message_frame,
-    simulated_stream,
 )
-from mi_inbound_pulsar_spark.streaming.delivery import RetryingPipeline
-
-
-def test_flaky_records_retry_until_success_poison_goes_to_dlq(spark, sf_dir):
-    staging = tempfile.mkdtemp(prefix="retry_int_")
-    stream = simulated_stream(spark, sf_dir, staging_dir=staging, files=3)
-    total = simulated_message_frame(spark, sf_dir).count()
-
-    attempts: dict[str, int] = {}
-    processed: list[str] = []
-
-    def process(rows) -> list[str]:
-        failed = []
-        for r in rows:
-            mid = r["message_id"]
-            n = attempts.get(mid, 0) + 1
-            attempts[mid] = n
-            mid_i = int(mid)
-            if mid_i % 100 == 7 and n <= 2:
-                failed.append(mid)  # flaky: succeeds on 3rd attempt
-            elif mid_i % 100 == 13:
-                failed.append(mid)  # poison: always fails
-            else:
-                processed.append(mid)
-        return failed
-
-    pipe = RetryingPipeline(process, DeadLetterPolicy(max_redeliveries=3), nack_delay_ms=0)
-    q = stream.writeStream.foreachBatch(pipe).start()
-    q.processAllAvailable()
-    q.stop()
-    # drain remaining redeliveries (stream ended; drive the pipe directly)
-    for _ in range(6):
-        pipe([], epoch_id=-1)
-
-    poison = {r["message_id"] for r in simulated_message_frame(spark, sf_dir)
-              .filter(F.col("message_id").cast("long") % 100 == 13).collect()}
-    flaky = {r["message_id"] for r in simulated_message_frame(spark, sf_dir)
-             .filter(F.col("message_id").cast("long") % 100 == 7).collect()}
-
-    # every flaky record eventually processed (3 attempts each)
-    assert flaky <= set(processed)
-    assert all(attempts[m] == 3 for m in flaky)
-    # every poison record hit the DLQ after exactly max_redeliveries
-    dead_ids = {r["message_id"] for r in pipe.dead_letters}
-    assert dead_ids == poison
-    assert all(attempts[m] == 3 for m in poison)
-    # nothing processed twice, nothing lost
-    assert len(processed) == len(set(processed)) == total - len(poison)
-    assert pipe.pending_ids() == []
-
-
-def test_nack_delay_defers_redelivery():
-    pipe = RetryingPipeline(
-        lambda rows: [r["message_id"] for r in rows],  # everything fails
-        DeadLetterPolicy(max_redeliveries=10),
-        nack_delay_ms=60_000,
-    )
-    from mi_inbound_pulsar_spark.streaming.delivery import _DictRow
-
-    pipe([_DictRow({"message_id": "1", "redelivery_count": 0})], 0, now=1000.0)
-    assert pipe.pending_ids() == ["1"]
-    # K5: before the delay elapses the record is NOT redelivered
-    seen: list[str] = []
-
-    def recording_process(rows):
-        seen.extend(r["message_id"] for r in rows)
-        return []  # succeed this time
-
-    pipe.process = recording_process
-    pipe([], 1, now=1030.0)
-    assert seen == []
-    pipe([], 2, now=1061.0)  # delay elapsed → redelivered
-    assert seen == ["1"]
-    assert pipe.pending_ids() == []
 
 
 def test_retrytable_ack_timeout_forces_redelivery():
@@ -134,7 +57,6 @@ def test_keyed_retry_flaky_poison_dlq_across_restart(spark, sf_dir, tmp_path):
             DeadLetterPolicy(max_redeliveries=3),
             state_dir=state,
             nack_delay_ms=0,
-            num_partitions=4,
         )
 
     def run_query(pipe):
@@ -220,7 +142,6 @@ def test_keyed_retry_ack_timeout_k6(spark, tmp_path):
         state_dir=str(tmp_path / "state"),
         nack_delay_ms=0,
         ack_timeout_ms=60_000,
-        num_partitions=2,
         clock=lambda: fake[0],
     )
     batch = spark.createDataFrame(
@@ -258,7 +179,6 @@ def test_keyed_retry_exponential_backoff(spark, tmp_path):
         nack_delay_ms=60_000,
         backoff_multiplier=2.0,
         max_delay_ms=180_000,
-        num_partitions=2,
         clock=lambda: fake[0],
     )
     batch = spark.createDataFrame([("a", 0)], "message_id string, redelivery_count int")
@@ -313,7 +233,6 @@ def test_keyed_retry_crash_between_dlq_and_state_replays_cleanly(spark, tmp_path
             state_dir=str(state_dir),
             dlq_dir=str(dlq_dir),
             nack_delay_ms=0,
-            num_partitions=2,
         )
 
     # control: no crash
@@ -330,25 +249,25 @@ def test_keyed_retry_crash_between_dlq_and_state_replays_cleanly(spark, tmp_path
     pipe(frame(range(1, 11)), 0)
     state_v0 = sorted(r["message_id"] for r in pipe.state_df(spark).collect())
 
-    orig = pipe._commit
+    orig = pipe.store.write
     calls = {"n": 0}
 
-    def torn(df, root, epoch_id):
-        orig(df, root, epoch_id)
+    def torn(df, root, epoch_id, key):
+        orig(df, root, epoch_id, key)
         calls["n"] += 1
         if calls["n"] == 1:  # DLQ landed; kill before the state write
             raise RuntimeError("injected crash mid-epoch")
 
-    pipe._commit = torn
+    pipe.store.write = torn
     with pytest.raises(RuntimeError, match="injected crash"):
         pipe(frame([]), 1)
-    pipe._commit = orig
+    pipe.store.write = orig
 
     # torn epoch on disk, invisible to readers
     import os
 
     assert os.path.isdir(str(tmp_path / "td" / "v1"))
-    assert pipe._committed_epochs() == [0]
+    assert pipe.store.committed(spark) == [0]
     assert pipe.dead_letters_df(spark) is None or (
         pipe.dead_letters_df(spark).count() == 0
     )
@@ -357,7 +276,7 @@ def test_keyed_retry_crash_between_dlq_and_state_replays_cleanly(spark, tmp_path
     ) == state_v0
 
     pipe(frame([]), 1)  # restart replay
-    assert pipe._committed_epochs() == [0, 1]
+    assert pipe.store.committed(spark) == [0, 1]
     got_dead = sorted(
         (r["message_id"], r["redelivery_count"])
         for r in pipe.dead_letters_df(spark).collect()
@@ -366,3 +285,57 @@ def test_keyed_retry_crash_between_dlq_and_state_replays_cleanly(spark, tmp_path
     # DLQ'd rows left the state table (bounded-state contract)
     live = {r["message_id"] for r in pipe.state_df(spark).collect()}
     assert not live & {"5", "10"}
+
+
+def test_stateful_pipelines_touch_state_only_through_the_epoch_store():
+    """One implementation of the epoch protocol: the pipeline modules
+    neither import shutil nor list, create or remove paths themselves —
+    all of that is ``EpochStore``'s (streaming/epochio.py), on the
+    Hadoop FileSystem API."""
+    import inspect
+
+    from mi_inbound_pulsar_spark.streaming import composed, curation, delivery, privacy
+
+    for mod in (delivery, privacy, curation, composed):
+        src = inspect.getsource(mod)
+        assert "shutil" not in src, mod.__name__
+        for call in ("os.listdir", "os.makedirs", "os.unlink"):
+            assert call not in src, (mod.__name__, call)
+
+
+def test_keyed_retry_file_uri_state_dir(spark, tmp_path):
+    """The keyed retry table on ``file://`` URIs: DLQ routing, the
+    keep-two retention of markers and state versions, and a DLQ read
+    that still sees the versions below the oldest surviving marker."""
+    import os
+
+    from mi_inbound_pulsar_spark.streaming.delivery import KeyedRetryPipeline
+
+    def process(deliver, epoch_id):
+        ok = F.col("message_id").cast("long") % 5 != 0  # 5, 10 always fail
+        return deliver.select("message_id", ok.alias("ok"))
+
+    pipe = KeyedRetryPipeline(
+        process,
+        DeadLetterPolicy(max_redeliveries=2),
+        state_dir=f"file://{tmp_path}/state",
+        dlq_dir=f"file://{tmp_path}/dlq",
+        nack_delay_ms=0,
+    )
+    schema = "message_id string, body string"
+    empty = spark.createDataFrame([], schema)
+    pipe(spark.createDataFrame([(str(i), "b") for i in range(1, 11)], schema), 0)
+    pipe(empty, 1)  # 5, 10 fail again -> DLQ at epoch 1
+    pipe(empty, 2)
+    pipe(empty, 3)
+
+    assert pipe.store.committed(spark) == [2, 3]
+    state = tmp_path / "state"
+    assert sorted(os.listdir(state / "_commits")) == ["2", "3"]
+    assert sorted(d for d in os.listdir(state) if d.startswith("v")) == ["v2", "v3"]
+    dead = {
+        (r["message_id"], r["redelivery_count"])
+        for r in pipe.dead_letters_df(spark).collect()
+    }
+    assert dead == {("5", 2), ("10", 2)}
+    assert pipe.state_df(spark).count() == 0

@@ -57,7 +57,7 @@ def test_streaming_curation_matches_batch_twin(spark, sf_dir):
     q.processAllAvailable()
     q.stop()
 
-    assert len(pipe._committed_epochs()) >= 3  # really a micro-batch sequence
+    assert len(pipe.store.committed(spark)) >= 3  # really a micro-batch sequence
     got = {
         (r.doc_id, r.source, r.n_tokens, r.stream_offset, r.pack_start)
         for r in pipe.read_output(spark).collect()
@@ -163,26 +163,26 @@ def test_crash_between_state_writes_replays_cleanly(spark):
     pipe = _pipe("curation_torn_")
     pipe(frame(0, 40), 0)
 
-    orig_write = pipe._write
+    orig_write = pipe.store.write
 
     def torn_write(df, root, epoch_id, key):
         orig_write(df, root, epoch_id, key)
         if os.path.basename(root) == "hashes" and epoch_id == 1:
             raise RuntimeError("injected crash mid-epoch")
 
-    pipe._write = torn_write
+    pipe.store.write = torn_write
     with pytest.raises(RuntimeError, match="injected crash"):
         pipe(frame(40, 80), 1)
-    pipe._write = orig_write
+    pipe.store.write = orig_write
 
     # hashes/v1 landed; its concurrent sibling families may or may
     # not have (intra-epoch writes are unordered since round 11) — no
     # marker landed, which is all the contract promises
     assert os.path.isdir(os.path.join(pipe.state_dir, "hashes", "v1"))
-    assert pipe._committed_epochs() == [0]
+    assert pipe.store.committed(spark) == [0]
 
     pipe(frame(40, 80), 1)  # restart replay
-    assert pipe._committed_epochs() == [0, 1]
+    assert pipe.store.committed(spark) == [0, 1]
     got = {
         (r.doc_id, r.stream_offset, r.pack_start)
         for r in pipe.read_output(spark).collect()
@@ -192,3 +192,62 @@ def test_crash_between_state_writes_replays_cleanly(spark):
     off = spark.read.parquet(os.path.join(pipe.state_dir, "offsets", "v1"))
     ctl_off = spark.read.parquet(os.path.join(ctl.state_dir, "offsets", "v1"))
     assert sorted(map(tuple, off.collect())) == sorted(map(tuple, ctl_off.collect()))
+
+
+def test_neardup_enabled_on_state_without_shingles_names_missing_epochs(spark, tmp_path):
+    """Turning the near-dup probe on over state committed while it was
+    off: the shingle index has no version for those epochs, and the
+    epoch fails with an error naming the family and the epochs, not a
+    raw path-not-found. Nothing is committed."""
+    import pytest
+
+    from mi_inbound_pulsar_spark.streaming.curation import StreamingCurationPipeline
+
+    dirs = {"state_dir": str(tmp_path / "state"), "out_dir": str(tmp_path / "out")}
+    text = " ".join(f"tok{i}" for i in range(30))
+    StreamingCurationPipeline(**dirs)(
+        spark.createDataFrame([(1, "web", text)], "doc_id long, source string, text string"),
+        0,
+    )
+
+    probe = StreamingCurationPipeline(**dirs, neardup_threshold=0.5)
+    with pytest.raises(FileNotFoundError) as info:
+        probe(
+            spark.createDataFrame(
+                [(2, "web", text + " more")], "doc_id long, source string, text string"
+            ),
+            1,
+        )
+    assert os.path.join(dirs["state_dir"], "shingles") in str(info.value)
+    assert "[0]" in str(info.value)
+    assert probe.store.committed(spark) == [0]
+
+
+def test_file_uri_state_dir(spark, tmp_path):
+    """With ``file://`` URIs for both roots the pipeline gives the same
+    output as with plain paths — cross-batch dedup and packing included
+    — and the markers land in the usual ``_commits/<epoch>`` layout."""
+    from mi_inbound_pulsar_spark.streaming.curation import StreamingCurationPipeline
+
+    texts = [" ".join(f"w{i}u{j}" for i in range(25)) for j in range(8)]
+    schema = "doc_id long, source string, text string"
+    b0 = spark.createDataFrame([(i, "web", texts[i]) for i in range(4)], schema)
+    # doc 10 repeats doc 0's text: the committed hash index drops it
+    b1 = spark.createDataFrame(
+        [(10, "web", texts[0])] + [(i, "web", texts[i]) for i in range(4, 8)], schema
+    )
+
+    outs = []
+    for prefix in ("", "file://"):
+        root = tmp_path / ("uri" if prefix else "plain")
+        pipe = StreamingCurationPipeline(
+            state_dir=f"{prefix}{root}/state", out_dir=f"{prefix}{root}/out"
+        )
+        pipe(b0, 0)
+        pipe(b1, 1)
+        assert pipe.store.committed(spark) == [0, 1]
+        assert sorted(os.listdir(root / "state" / "_commits")) == ["0", "1"]
+        accepted = spark.read.parquet(str(root / "state" / "hashes" / "v1"))
+        assert sorted(r.doc_id for r in accepted.collect()) == [4, 5, 6, 7]
+        outs.append(sorted(map(tuple, pipe.read_output(spark).collect())))
+    assert outs[0] == outs[1]

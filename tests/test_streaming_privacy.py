@@ -156,23 +156,23 @@ def test_crash_between_state_writes_replays_cleanly(spark):
     pipe = _pipe(spark)
     pipe(b0, 0)
 
-    orig_write = pipe._write
+    orig_write = pipe.store.write
 
     def torn_write(df, root, epoch_id, key):
         orig_write(df, root, epoch_id, key)
         if os.path.basename(root) == "stats" and epoch_id == 1:
             raise RuntimeError("injected crash mid-epoch")
 
-    pipe._write = torn_write
+    pipe.store.write = torn_write
     with pytest.raises(RuntimeError, match="injected crash"):
         pipe(b1, 1)
-    pipe._write = orig_write
+    pipe.store.write = orig_write
 
     # torn state on disk: stats/v1 exists (its concurrent siblings may
     # too — intra-epoch writes are unordered since round 11), no
     # marker, readers blind to the whole epoch
     assert os.path.isdir(os.path.join(pipe.state_dir, "stats", "v1"))
-    assert pipe._committed_epochs() == [0]
+    assert pipe.store.committed(spark) == [0]
     assert all(
         r["release_epoch"] == 0 for r in pipe.read_output(spark).collect()
     )
@@ -180,10 +180,58 @@ def test_crash_between_state_writes_replays_cleanly(spark):
     # restart: at-least-once redelivers epoch 1; the replay must
     # rewrite the torn stats/v1 (not add to it) and land everything
     pipe(b1, 1)
-    assert pipe._committed_epochs() == [0, 1]
+    assert pipe.store.committed(spark) == [0, 1]
     got_out = sorted(
         (r["rid"], r["release_epoch"]) for r in pipe.read_output(spark).collect()
     )
     assert got_out == want_out == [(1, 1), (2, 1), (3, 1), (4, 1), (5, 1)]
     stats = spark.read.parquet(os.path.join(pipe.state_dir, "stats", "v1"))
     assert stats.agg(F.sum("n")).first()[0] == 5  # 10 would mean torn+replay summed
+
+
+def test_two_failed_family_writes_both_reach_the_caller(spark):
+    """When two of an epoch's concurrent family writes fail, the epoch
+    raises both (an ExceptionGroup), not just the first, and lands no
+    marker."""
+    import pytest
+
+    pipe = _pipe(spark)
+    orig_write = pipe.store.write
+
+    def failing_write(df, root, epoch_id, key):
+        if os.path.basename(root) in ("stats", "pending"):
+            raise RuntimeError(f"injected {os.path.basename(root)} failure")
+        orig_write(df, root, epoch_id, key)
+
+    pipe.store.write = failing_write
+    with pytest.raises(ExceptionGroup) as info:
+        pipe(_frame(spark, [(1, 1, "A", 0), (2, 1, "A", 1)]), 0)
+    pipe.store.write = orig_write
+
+    assert sorted(str(e) for e in info.value.exceptions) == [
+        "injected pending failure",
+        "injected stats failure",
+    ]
+    assert pipe.store.committed(spark) == []
+
+
+def test_file_uri_state_dir(spark, tmp_path):
+    """The state protocol runs on Hadoop paths: with ``file://`` URIs
+    for both roots, park-and-release gives the same result and the
+    markers land in the usual ``_commits/<epoch>`` layout."""
+    from mi_inbound_pulsar_spark.streaming.privacy import StreamingPrivacyPipeline
+
+    pipe = StreamingPrivacyPipeline(
+        state_dir=f"file://{tmp_path}/state",
+        out_dir=f"file://{tmp_path}/out",
+        qi_cols=["nat", "seg"],
+        band_col="band",
+        id_col="rid",
+    )
+    pipe(_frame(spark, [(1, 1, "A", 0), (2, 1, "A", 1), (3, 1, "A", 2)]), 0)
+    pipe(_frame(spark, [(4, 1, "A", 0), (5, 1, "A", 1), (6, 2, "B", 0)]), 1)
+
+    assert pipe.store.committed(spark) == [0, 1]
+    assert sorted(os.listdir(tmp_path / "state" / "_commits")) == ["0", "1"]
+    assert sorted(r["rid"] for r in pipe.read_output(spark).collect()) == [1, 2, 3, 4, 5]
+    assert [r["rid"] for r in pipe.read_pending(spark).collect()] == [6]
