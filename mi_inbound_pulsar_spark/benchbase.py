@@ -64,6 +64,9 @@ from pathlib import Path
 #: from the freeze. Changing a probe's kernel therefore forces a
 #: deliberate probe swap + freeze regeneration
 #: (``python tools/gen_probe_freeze.py``) in the same commit.
+#: The digest does not see module-level constants (a threshold, a K)
+#: or helpers reached only as ``module.attr``: a probe that changes
+#: through one of those keeps its digest, so check them by hand.
 #: Round-13 rotation under that rule: ``q_triangle_count`` (round-12
 #: dedup-pin blast radius; measured 5.7x its committed min while the
 #: median probe sat at 1.76x this session) and

@@ -48,14 +48,9 @@ def fanout_partitions(spark: SparkSession) -> int:
     ADVICE): under **dynamic allocation** ``defaultParallelism`` is
     read at plan-build time and a cold cluster can report far fewer
     cores than it will eventually hold, freezing the fan-out stages
-    narrow. Such deployments set ``SPARK_GRAFT_FANOUT_PARTITIONS`` to
-    the intended steady-state core count (the same env-override
-    pattern as ``SPARK_GRAFT_OPEN_COST_BYTES``)."""
-    import os
-
-    override = os.environ.get("SPARK_GRAFT_FANOUT_PARTITIONS")
-    if override:
-        return int(override)
+    narrow. Such deployments set ``spark.default.parallelism`` (e.g.
+    through ``get_spark(extra_conf=...)``) to the intended steady-state
+    core count; ``defaultParallelism`` returns it."""
     return spark.sparkContext.defaultParallelism
 
 _ROW_COUNT_CACHE: dict[str, int] = {}

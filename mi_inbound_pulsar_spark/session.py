@@ -28,7 +28,10 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or reuse) a SparkSession with scale-aware defaults."""
+    """Build (or reuse) a SparkSession with scale-aware defaults.
+
+    ``extra_conf`` is applied last, so it overrides any default below,
+    e.g. the 128 KB ``spark.sql.files.openCostInBytes``."""
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{_CPUS}]")
@@ -50,13 +53,10 @@ def get_spark(
         # parquet and lets the bytes/cores term govern (a 10.8 MB scan
         # splits ~32 ways on 32 cores, a 100 TB scan is unaffected —
         # bytes/cores dominates the floor there). Interleaved 28-query
-        # A/B at sf0.1: 59.5 s → 54.1 s total-of-mins. Env-overridable
-        # for deployments where file-open cost is genuinely high
-        # (cold object stores, many tiny files).
-        .config(
-            "spark.sql.files.openCostInBytes",
-            os.environ.get("SPARK_GRAFT_OPEN_COST_BYTES", "131072"),
-        )
+        # A/B at sf0.1: 59.5 s → 54.1 s total-of-mins. Deployments where
+        # file-open cost is genuinely high (cold object stores, many tiny
+        # files) pass their own value through ``extra_conf``.
+        .config("spark.sql.files.openCostInBytes", "131072")
         # plans/iterate.eager_checkpoint falls back to RELIABLE
         # checkpoints on cluster masters / under dynamic allocation;
         # without this, those checkpoint files are never deleted and a

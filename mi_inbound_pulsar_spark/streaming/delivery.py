@@ -16,10 +16,13 @@ Reference semantics being re-expressed (SURVEY.md §2A):
 - K5/K6/K7 — nack/redelivery/DLQ: Pulsar nacks per *record*;
   micro-batch replay is per *batch*. The finer-grained equivalent is a
   retry table keyed by message_id carrying ``redelivery_count`` and
-  ``last_attempt``: failures are appended, re-unioned into the next
-  batch after ``nack_delay`` (K5), forced out after ``ack_timeout``
-  (K6), and routed to the DLQ sink once ``redelivery_count`` exceeds
-  the policy max (K7, default 5 per PulsarMessageConsumer.java:296-298).
+  the last attempt time. Each epoch is settled once: one left join of
+  the delivered rows to their outcomes parks every row that is not
+  acked (a nack, a NULL outcome or no outcome) with its count bumped;
+  parked rows are re-unioned into a later batch after ``nack_delay``
+  (K5) or ``ack_timeout`` (K6), and :func:`dlq_split` routes those
+  whose count reaches the policy max to the DLQ (K7, default 5 per
+  PulsarMessageConsumer.java:296-298).
 
 Scale: the retry table is partitioned by message_id hash and is
 idempotent (last-write-wins upsert per message_id), so batch replays
@@ -219,13 +222,15 @@ class KeyedRetryPipeline:
     counts — last-write-wins upsert, idempotent under K3 replay.
 
     ``process(deliver_df, epoch) -> DataFrame[(message_id, ok bool)]``
-    decides per-record outcomes. Rows delivered but MISSING from the
-    outcome frame are the K6 case: with ``ack_timeout_ms`` set they are
-    parked and redelivered once the timeout elapses; without one they
-    are treated as nacked immediately (conservative at-least-once).
-    Rows whose bumped count reaches ``policy.max_redeliveries`` are
-    routed to the DLQ family and dropped from state, keeping state
-    bounded.
+    decides per-record outcomes, and the delivered rows are joined to
+    them once (left join). A row is acked only when its ``ok`` is true;
+    a false or NULL ``ok`` is a nack. Rows delivered but MISSING from
+    the outcome frame are the K6 case: with ``ack_timeout_ms`` set they
+    are parked and redelivered once the timeout elapses; without one
+    they are treated as nacked immediately (conservative at-least-once).
+    Parked rows carry their bumped count in ``redelivery_count``, and
+    :func:`dlq_split` sends those that reach ``policy.max_redeliveries``
+    to the DLQ family and drops them from state, keeping state bounded.
 
     Scale: state shuffles only parked rows (failures — a sliver of the
     stream) on a 1-column key; the due-row scan is a filter over a
@@ -233,7 +238,7 @@ class KeyedRetryPipeline:
     no extra shuffle beyond the per-batch plan.
     """
 
-    _META = ("_retry_count", "_retry_last", "_retry_pending_ack")
+    _META = ("_retry_last", "_retry_pending_ack")
 
     def __init__(
         self,
@@ -259,7 +264,7 @@ class KeyedRetryPipeline:
         self.store = EpochStore(state_dir, keep=2)
 
     def _delay_col(self):
-        count = F.col("_retry_count")
+        count = F.col("redelivery_count")
         delay_ms = F.lit(float(self.nack_delay_ms)) * F.pow(
             F.lit(float(self.backoff_multiplier)), F.greatest(count - 1, F.lit(0)).cast("double")
         )
@@ -287,43 +292,35 @@ class KeyedRetryPipeline:
                 .join(fresh.select("message_id"), "message_id", "left_anti")
             )
             held = state.filter(~due_pred)
-            deliver = fresh.unionByName(
-                due.withColumn("redelivery_count", F.col("_retry_count")).drop(*self._META)
-            )
+            deliver = fresh.unionByName(due.drop(*self._META))
         else:
             held = None
             deliver = fresh
 
         outcome = self.process(deliver, epoch_id).select(
-            "message_id", F.col("ok").cast("boolean").alias("ok")
+            "message_id", F.col("ok").cast("boolean").alias("ok"), F.lit(True).alias("_responded")
         )
-        # nacked = explicit failures; missing-from-outcome = K6 unacked
-        responded = deliver.join(outcome, "message_id", "inner")
-        nacked = responded.filter(~F.col("ok")).drop("ok").withColumn(
-            "_retry_pending_ack", F.lit(False)
-        )
-        unacked = deliver.join(outcome, "message_id", "left_anti").withColumn(
-            "_retry_pending_ack", F.lit(self.ack_timeout_ms is not None)
-        )
+        # one settle: anything not ok is parked — an explicit nack, a NULL
+        # ok, or no response at all (K6 unacked when an ack timeout is set)
         parked = (
-            nacked.unionByName(unacked)
-            .withColumn("_retry_count", F.col("redelivery_count") + 1)
-            .withColumn("_retry_last", F.lit(now))
+            deliver.join(outcome, "message_id", "left")
+            .filter(~F.coalesce(F.col("ok"), F.lit(False)))
+            .withColumns({
+                "redelivery_count": F.col("redelivery_count") + 1,
+                "_retry_last": F.lit(now),
+                "_retry_pending_ack": F.col("_responded").isNull()
+                & F.lit(self.ack_timeout_ms is not None),
+            })
+            .drop("ok", "_responded")
         )
         # K7: exhausted → DLQ (dropped from state: bounded)
-        dead = parked.filter(F.col("_retry_count") >= F.lit(self.policy.max_redeliveries))
-        live = parked.filter(F.col("_retry_count") < F.lit(self.policy.max_redeliveries))
+        live, dead = dlq_split(parked, self.policy)
         if held is not None:
             live = live.unionByName(held)
 
         # DLQ before state, sequentially: a crash between them is the
         # torn epoch the crash test injects
-        self.store.write(
-            dead.withColumn("redelivery_count", F.col("_retry_count")).drop(*self._META),
-            self.dlq_dir,
-            epoch_id,
-            "message_id",
-        )
+        self.store.write(dead.drop(*self._META), self.dlq_dir, epoch_id, "message_id")
         self.store.write(live, self.state_dir, epoch_id, "message_id")
         self.store.commit(spark, epoch_id)
 

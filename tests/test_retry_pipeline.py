@@ -339,3 +339,89 @@ def test_keyed_retry_file_uri_state_dir(spark, tmp_path):
     }
     assert dead == {("5", 2), ("10", 2)}
     assert pipe.state_df(spark).count() == 0
+
+
+def test_keyed_retry_null_ok_is_a_nack(spark, tmp_path):
+    """A NULL ``ok`` is not an ack: the row is parked like an explicit
+    nack, so it is neither lost nor dead-lettered early."""
+    from mi_inbound_pulsar_spark.streaming.delivery import KeyedRetryPipeline
+
+    def process(deliver, epoch_id):
+        mid = F.col("message_id")
+        ok = F.when(mid == "1", True).when(mid == "2", False).otherwise(F.lit(None))
+        return deliver.select("message_id", ok.cast("boolean").alias("ok"))
+
+    pipe = KeyedRetryPipeline(
+        process,
+        DeadLetterPolicy(max_redeliveries=5),
+        state_dir=str(tmp_path / "state"),
+        nack_delay_ms=60_000,
+    )
+    batch = spark.createDataFrame([("1",), ("2",), ("3",)], "message_id string")
+    pipe(batch, 0)
+    parked = {(r["message_id"], r["redelivery_count"]) for r in pipe.state_df(spark).collect()}
+    assert parked == {("2", 1), ("3", 1)}
+    dead = pipe.dead_letters_df(spark)
+    assert dead is None or dead.count() == 0
+
+
+def test_keyed_retry_matches_retry_table_reference(spark, tmp_path):
+    """Differential check of the keyed pipeline against ``RetryTable``,
+    its in-memory reference model: the same seeded schedule (three
+    fresh epochs, then empty drain epochs on a fixed clock) and the
+    same arithmetic outcome rule must redeliver, park and dead-letter
+    the same ids with the same counts after every epoch."""
+    import random
+
+    from mi_inbound_pulsar_spark.streaming.delivery import KeyedRetryPipeline, RetryTable
+
+    def ok_of(mid: int, count: int) -> bool:
+        # id % 4 == k is acked on delivery k + 1; k == 3 is dead-lettered
+        return mid % 4 <= count
+
+    policy = DeadLetterPolicy(max_redeliveries=3)
+    knobs = {"nack_delay_ms": 1000, "backoff_multiplier": 2.0}
+    ids = random.Random(11).sample(range(1, 1000), 45)
+    schedule = [ids[0:15], ids[15:30], ids[30:45]] + [[]] * 6
+    clock = [1000.0]
+    seen: list[tuple[str, int]] = []
+
+    def process(deliver, epoch_id):
+        seen.extend((r["message_id"], r["redelivery_count"]) for r in deliver.collect())
+        m, c = F.col("message_id").cast("long"), F.col("redelivery_count")
+        return deliver.select("message_id", (m % 4 <= c).alias("ok"))
+
+    pipe = KeyedRetryPipeline(
+        process, policy, state_dir=str(tmp_path / "state"), clock=lambda: clock[0], **knobs
+    )
+    ref = RetryTable(policy, **knobs)
+    redelivered_total = 0
+    for epoch, fresh in enumerate(schedule):
+        clock[0] = 1000.0 + epoch  # one second per epoch
+        now = clock[0]
+
+        # reference: redeliver what is due, then settle every delivery
+        due = [(m, ref.redelivery_count(m)) for m in ref.due_for_redelivery(now)]
+        delivered = [(str(m), 0) for m in fresh] + due
+        ref.ack([m for m, c in delivered if ok_of(int(m), c)])
+        ref.nack([m for m, c in delivered if not ok_of(int(m), c)], now=now)
+        counts = {(str(m), ref.redelivery_count(str(m))) for m in ids}
+        want_parked = {(m, c) for m, c in counts if 0 < c < policy.max_redeliveries}
+        want_dead = {(m, ref.redelivery_count(m)) for m in ref.dead_letters()}
+
+        seen.clear()
+        pipe(spark.createDataFrame([(str(m),) for m in fresh], "message_id string"), epoch)
+        assert sorted(c for c in seen if c[1] > 0) == sorted(due), epoch
+        state = pipe.state_df(spark)
+        assert {(r["message_id"], r["redelivery_count"]) for r in state.collect()} == (
+            want_parked
+        ), epoch
+        dead_df = pipe.dead_letters_df(spark)
+        got_dead = set() if dead_df is None else {
+            (r["message_id"], r["redelivery_count"]) for r in dead_df.collect()
+        }
+        assert got_dead == want_dead, epoch
+        redelivered_total += len(due)
+
+    # the schedule exercises every path and drains completely
+    assert redelivered_total > 0 and want_dead and not want_parked
